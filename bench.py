@@ -501,7 +501,6 @@ def main() -> None:
             num_buckets=int(CPUS), shuffle_partitions=int(CPUS),
             files_max_partition_bytes=8 * 1024 * 1024,
             files_open_cost_bytes=8 * 1024 * 1024,
-            doc_id_mode="monotone",
         )
         work = tempfile.mkdtemp(prefix="bench_zipf_")
         idx = os.path.join(work, "index")

@@ -30,7 +30,6 @@ def main() -> None:
     ap.add_argument("--resume-batches", type=int, default=4)
     ap.add_argument("--stemming", action="store_true")
     ap.add_argument("--glove", default=None)
-    ap.add_argument("--no-compress", action="store_true")
     ap.add_argument(
         "--topical-terms", default=None,
         help="comma-separated terms for the doc_stats_topical shard "
@@ -55,8 +54,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("WARN")
     pages = spark.read.option("recursiveFileLookup", "true").parquet(args.pages)
     metrics = build_index(
-        spark, pages, args.index_path, cfg,
-        compress=not args.no_compress, resume_batches=args.resume_batches,
+        spark, pages, args.index_path, cfg, resume_batches=args.resume_batches,
     )
     print(json.dumps({"status": "ok", **metrics}))
     spark.stop()

@@ -498,7 +498,6 @@ def build_index(
     pages: DataFrame,
     index_path: str,
     config: EngineConfig | None = None,
-    compress: bool = True,
     resume_batches: int = 4,
 ) -> dict:
     """Run the full index build; returns build metrics.
@@ -507,10 +506,18 @@ def build_index(
     the checkpoint boundary for resume. Stage B derives all index tables
     from the staged parse with exactly two wide shuffles: one groupBy
     (bucket, term) for postings and one small groupBy(term) for stats.
+
+    Resuming into an index built with url-hash doc ids raises ValueError
+    (see ``require_monotone_doc_ids``).
     """
     cfg = config or EngineConfig()
     cat = CatalogAdapter(index_path)
     t0 = time.time()
+    props = cat.properties()
+    if props or cat.has_table("parsed"):
+        require_monotone_doc_ids(props)
+    else:
+        cat.set_properties({"doc_id_mode": DOC_ID_LAYOUT})
 
     # ---- stage A: parse + stage (resume checkpoint) -----------------------
     # The expensive narrow stage is committed in `resume_batches` slices,
@@ -534,17 +541,19 @@ def build_index(
             spark, cat, plan, cat.batch_entries("parsed"), resume_batches,
             pages.schema,
         )
-        done = set(cat.completed_batches("parsed"))
-        # batch_seq is the POSITIONAL index in the (deterministic) plan, so
-        # a resumed monotone-mode build re-assigns the same id ranges to the
-        # same batches it would have gotten in one pass
-        for batch_seq, (batch_id, subset, lineage) in enumerate(plan):
+        done = cat.completed_batches("parsed")
+        for batch_id, subset, lineage in plan:
             if batch_id in done:
                 continue
             if scan_par < target_par:
                 subset = subset.repartition(target_par)
+            # id slot = batches committed before this one: a one-pass build
+            # and a resumed one give batch i slot i, and a resume that
+            # regroups the remaining files under fresh batch ids cannot
+            # reuse a slot a kept batch already holds
             cat.append_batch(
-                parse_corpus(subset, cfg, batch_seq=batch_seq),
+                parse_corpus(subset, cfg,
+                             batch_seq=len(cat.completed_batches("parsed"))),
                 "parsed", batch_id, metrics=lineage,
             )
         cat.finalize_batched_table("parsed")
@@ -565,7 +574,6 @@ def build_index(
         "wall_sec": wall,
         "parse_sec": t_parse - t0,
         "docs_per_sec": (int(n_docs) / wall) if wall > 0 else math.inf,
-        "compressed": compress,
         "num_buckets": cfg.num_buckets,
         "stage_sec": stage_sec,
     }
@@ -713,7 +721,6 @@ def derive_index_tables(
             "glove_path": cfg.glove_path,
             "glove_dim": cfg.glove_dim,
             "num_buckets": cfg.num_buckets,
-            "doc_id_mode": cfg.doc_id_mode,
         })
     else:
         _check_config_vs_properties(cfg, props)
@@ -752,8 +759,9 @@ def merge_derive_tables(
     - ``postings`` — the (bucket, term) groups that gained no new docs
       pass through BYTE-IDENTICAL (no decode, no shuffle: a broadcastable
       anti-join against the fresh group keys); groups present on both
-      sides decode-merge-re-encode; fresh-only groups come straight from
-      the streaming encoder. Correctness under the avg_dl drift this
+      sides tail-append the fresh postings (batch-monotone ids: every
+      fresh id exceeds every old one); fresh-only groups come straight
+      from the streaming encoder. Correctness under the avg_dl drift this
       implies: ``block_max`` is a function of the avg_dl at ENCODE time,
       and the tf-side BM25 factor grows with avg_dl by at most the ratio
       of the avg_dls, so every row carries ``enc_avgdl`` and the query
@@ -761,22 +769,17 @@ def merge_derive_tables(
       (operators/search.py) — bounds stay upper bounds, WAND stays exact,
       and untouched rows never need re-encoding.
     - ``term_stats`` — global df re-aggregates from the merged postings
-      (|vocab|·buckets rows, cheap); the vocabulary quirk fold (capitals
-      AND, entity counts) still scans the full parsed relation — the one
-      remaining full-corpus pass, documented as such.
+      (a (term, local_df) column scan, no blob bytes); the vocabulary
+      quirk states (capitals AND, entity counts) persisted at build time
+      fold with the fresh batch's aggregate (min / sum), so no step scans
+      the full parsed relation.
 
-    Cost shape, honestly: decode+re-encode work is proportional to the
-    posting MASS of the touched groups, not the increment — a hot term's
-    whole list re-encodes when any new doc contains it (doc_id is an url
-    hash, so new ids interleave; a time-monotone doc_id would make every
-    merge a tail-append and the work increment-proportional, at the cost
-    of re-keying the engine's tie-breaks and parity tests). On the dense
-    synthetic vocabulary a 10% increment touches the groups holding most
-    of the mass (measured: 39% of groups, sf0.1), so wall-clock sits near
-    the full re-derive locally; on a Zipf-tailed web vocabulary (1e7-1e8
-    terms, most df<10) the untouched fraction — which passes through with
-    ZERO decode and no shuffle (broadcast anti-join) — dominates, and the
-    fold costs table IO plus the increment's mass.
+    Cost shape: a touched multi-block group splices at a block boundary
+    (codec.append_posting_blob: only the old final partial block decodes,
+    the rest is a memcpy), so merge work is proportional to the increment
+    plus one block per touched group, not to the touched groups' posting
+    mass; the remaining cost is table I/O — the untouched bulk is read
+    and rewritten without decode or shuffle.
 
     All writes are atomic per table (catalog _tmp + rename); the caller
     commits the ``derived_from_batches`` staleness stamp after the last
@@ -901,22 +904,20 @@ def merge_derive_tables(
         ])
         block_size, k, b = cfg.block_size, cfg.bm25_k, cfg.bm25_b
         enc_avgdl = float(avg_dl)
-        monotone = cfg.doc_id_mode == "monotone"
 
         def _merge(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            # Two merge kernels, routed per group:
+            # Every fresh id exceeds every old one (batch-monotone ids), so
+            # a merge is a tail-append. Two kernels, routed per group:
             #
-            # - splice (monotone ids, multi-block old list): tail-append via
-            #   codec.append_posting_blob — the old bulk is a header-adjusted
-            #   memcpy, only its final partial block decodes; work is
-            #   O(block_size + increment) no matter how hot the term. This is
-            #   the path that makes compaction increment-proportional (hash
-            #   ids interleave, so they can never take it).
-            # - full re-encode (hash mode, or old fits in one block so a
-            #   splice would decode everything anyway): decode both sides,
-            #   merge-sort by doc_id, re-encode the WHOLE batch of groups in
-            #   one vectorized pass (_encode_group_batch — the same kernel
-            #   the build's streaming encoder uses, so merged blobs are
+            # - splice (multi-block old list): codec.append_posting_blob —
+            #   the old bulk is a header-adjusted memcpy, only its final
+            #   partial block decodes; work is O(block_size + increment) no
+            #   matter how hot the term.
+            # - batched re-encode (old list fits in one block, so a splice
+            #   would decode all of it anyway): decode both sides,
+            #   concatenate, re-encode the WHOLE batch of groups in one
+            #   vectorized pass (_encode_group_batch — the same kernel the
+            #   build's streaming encoder uses, so merged blobs are
             #   byte-identical to a from-scratch encode of the same
             #   postings).
             from search_engine_spark.operators.codec import (
@@ -926,22 +927,24 @@ def merge_derive_tables(
             for pdf in batches:
                 if not len(pdf):
                     continue
-                if monotone:
-                    multi = pdf["old_last"].map(len) > 1
-                    big, small = pdf[multi], pdf[~multi]
-                else:
-                    big, small = pdf.iloc[0:0], pdf
+                multi = pdf["old_last"].map(len) > 1
+                big, small = pdf[multi], pdf[~multi]
                 parts = []
                 if len(small):
                     g_ids, g_dls, g_tfs = [], [], []
                     for r in small.itertuples(index=False):
                         ids1, dl1, tf1 = decode_posting_list(bytes(r.old_blob))
                         ids2, dl2, tf2 = decode_posting_list(bytes(r.new_blob))
-                        ids = np.concatenate([ids1, ids2])
-                        order = np.argsort(ids, kind="stable")
-                        g_ids.append(ids[order])
-                        g_dls.append(np.concatenate([dl1, dl2])[order])
-                        g_tfs.append(np.concatenate([tf1, tf2])[order])
+                        if ids2[0] <= ids1[-1]:
+                            raise ValueError(
+                                "posting merge precondition violated: new doc "
+                                f"ids must all exceed the old list's last id "
+                                f"({int(ids1[-1])} >= {int(ids2[0])}) — not a "
+                                "monotone-id index?"
+                            )
+                        g_ids.append(np.concatenate([ids1, ids2]))
+                        g_dls.append(np.concatenate([dl1, dl2]))
+                        g_tfs.append(np.concatenate([tf1, tf2]))
                     lens = np.array([len(x) for x in g_ids], np.int64)
                     ends = np.cumsum(lens)
                     starts = ends - lens
@@ -1064,6 +1067,29 @@ def merge_derive_tables(
     return stage_sec, n_docs, avg_dl
 
 
+#: manifest stamp of the batch-monotone doc_id layout (parse.assign_doc_ids).
+#: Indexes stamped otherwise, or built before the stamp existed, carry
+#: url-hash doc ids, which interleave and cannot be tail-appended.
+DOC_ID_LAYOUT = "monotone"
+
+
+def require_monotone_doc_ids(props: dict) -> None:
+    """Raise unless the index manifest stamps the batch-monotone layout.
+
+    Guards every path that writes new doc ids into an existing index
+    (build resume, streaming compaction); queries read no doc_id order
+    and still serve an older index.
+    """
+    stamp = props.get("doc_id_mode")
+    if stamp != DOC_ID_LAYOUT:
+        raise ValueError(
+            f"index manifest stamps doc_id_mode={stamp!r}, not "
+            f"{DOC_ID_LAYOUT!r}: it was built with url-hash doc ids, which "
+            "build resume and compaction no longer support — rebuild the "
+            "index from its pages with build_index"
+        )
+
+
 def _check_config_vs_properties(cfg: EngineConfig, props: dict) -> None:
     """Raise if a config contradicts the index's build-time stamps."""
     mismatches = []
@@ -1073,7 +1099,6 @@ def _check_config_vs_properties(cfg: EngineConfig, props: dict) -> None:
         ("glove_path", cfg.glove_path),
         ("glove_dim", cfg.glove_dim),
         ("num_buckets", cfg.num_buckets),
-        ("doc_id_mode", cfg.doc_id_mode),
     ):
         if key in props and props[key] != val:
             mismatches.append(f"{key}: index={props[key]!r} config={val!r}")
@@ -1106,5 +1131,4 @@ def config_from_properties(
         glove_path=props.get("glove_path", defaults.glove_path),
         glove_dim=int(props.get("glove_dim", defaults.glove_dim)),
         num_buckets=int(props.get("num_buckets", defaults.num_buckets)),
-        doc_id_mode=str(props.get("doc_id_mode", defaults.doc_id_mode)),
     )

@@ -97,47 +97,44 @@ def _parse_batches(stemming: bool):
     return fn
 
 
-#: monotone doc_id layout: ids of batch k live in [k·2^48, (k+1)·2^48) —
-#: see EngineConfig.doc_id_mode
+#: batch-monotone doc_id layout: ids of batch k live in [k·2^48, (k+1)·2^48)
 DOC_ID_BATCH_SHIFT = 48
 
 
 def assign_doc_ids(
     parsed: DataFrame, cfg: EngineConfig, batch_seq: int = 0
 ) -> DataFrame:
-    """Attach ``doc_id`` + ``bucket`` per the configured id mode.
+    """Attach ``doc_id`` + ``bucket``.
 
-    hash mode: doc_id = xxhash64(url) — stable and content-addressed.
+    doc_id = batch_seq·2^48 + monotonically_increasing_id(): every id of
+    batch k+1 exceeds every id of batch k, so an incremental posting merge
+    is a tail-append (codec.append_posting_blob) and in-batch id gaps stay
+    small enough for delta encoding to pay. Callers pass the number of
+    ``parsed`` batches committed before this one as ``batch_seq``. Ranking
+    never reads doc_id: the tie-break is (score, warc_ts, url), as the
+    reference ties on date, not id (ranker.py:51-63).
 
-    monotone mode: doc_id = batch_seq·2^48 + monotonically_increasing_id()
-    — every id of batch k+1 exceeds every id of batch k, which is what
-    makes incremental posting merges tail-appends (codec.
-    append_posting_blob). The in-batch id is (partition << 33 | row): it is
-    assigned on a narrow, deterministically-partitioned chain (parquet scan
-    → mapInPandas) and immediately persisted by the caller's table append,
-    so a task retry regenerates identical values; the overflow guard keeps
-    the batch term inside its 2^48 slot (32k partitions x 8.6B rows per
-    ingest batch). ``bucket`` stays pmod(doc_id, num_buckets) — sequential
-    in-batch ids round-robin across buckets, so balance is preserved.
+    The in-batch id is (partition << 33 | row): it is assigned on a narrow,
+    deterministically-partitioned chain (parquet scan → mapInPandas) and
+    immediately persisted by the caller's table append, so a task retry
+    regenerates identical values. Envelope: batch_seq < 2^15 and < 2^48 ids
+    per batch (32k input partitions x 8.6B rows); exceeding either raises.
+    ``bucket`` is pmod(doc_id, num_buckets) — sequential in-batch ids
+    round-robin across buckets, so balance is preserved.
     """
-    if cfg.doc_id_mode == "monotone":
-        if not 0 <= batch_seq < (1 << 15):
-            raise ValueError(
-                f"monotone doc_id batch_seq {batch_seq} outside [0, 2^15)"
-            )
-        mid = F.monotonically_increasing_id()
-        base = F.lit(batch_seq << DOC_ID_BATCH_SHIFT).cast("long")
-        doc_id = F.when(mid < F.lit(1 << DOC_ID_BATCH_SHIFT), base + mid
-                        ).otherwise(
-            F.raise_error(
-                F.lit("monotone doc_id overflow: > 2^48 ids in one batch "
-                      "(coalesce the ingest batch or split it)")
-            ).cast("long")
+    if not 0 <= batch_seq < (1 << 15):
+        raise ValueError(
+            f"monotone doc_id batch_seq {batch_seq} outside [0, 2^15)"
         )
-    elif cfg.doc_id_mode == "hash":
-        doc_id = F.xxhash64("url")
-    else:
-        raise ValueError(f"unknown doc_id_mode {cfg.doc_id_mode!r}")
+    mid = F.monotonically_increasing_id()
+    base = F.lit(batch_seq << DOC_ID_BATCH_SHIFT).cast("long")
+    doc_id = F.when(mid < F.lit(1 << DOC_ID_BATCH_SHIFT), base + mid
+                    ).otherwise(
+        F.raise_error(
+            F.lit("monotone doc_id overflow: > 2^48 ids in one batch "
+                  "(coalesce the ingest batch or split it)")
+        ).cast("long")
+    )
     return parsed.withColumn("doc_id", doc_id).withColumn(
         "bucket", F.pmod(F.col("doc_id"), F.lit(cfg.num_buckets)).cast("int")
     )
@@ -148,11 +145,10 @@ def parse_corpus(
 ) -> DataFrame:
     """web_pages DataFrame → parsed docs with doc_id + bucket columns.
 
-    ``doc_id`` is a 64-bit hash of the url by default (stable,
-    cluster-independent), or a batch-monotone id when
-    ``config.doc_id_mode == "monotone"`` (see ``assign_doc_ids``);
-    ``bucket`` doc-partitions the index so every term's postings are spread
-    across all shards (hot-term skew never lands on one reducer).
+    ``doc_id`` is a batch-monotone id in the 2^48 slot ``batch_seq`` (see
+    ``assign_doc_ids``); ``bucket`` doc-partitions the index so every
+    term's postings are spread across all shards (hot-term skew never lands
+    on one reducer).
     """
     cfg = config or EngineConfig()
     parsed = pages.select("url", "warc_ts", "text").mapInPandas(

@@ -173,21 +173,25 @@ def compact_staging(
     staged postings as extra rows would silently shadow existing lists.
     Compaction exploits the build's own checkpoint structure:
 
-    1. append the staged parse rows (minus already-indexed doc_ids —
+    1. append the staged parse rows (minus already-indexed urls —
        idempotence under replay/re-crawl, and minus duplicates WITHIN
        staging from foreachBatch retries or re-crawls of the same url)
        as a new batch of the ``parsed`` table, with lineage in the
-       manifest;
+       manifest and doc ids re-assigned in the next free 2^48 slot;
     2. INCREMENTAL derive (``merge_derive_tables``): posting rows whose
        (bucket, term) group gained no new docs pass through the exchange
-       byte-identical (no decode); only touched groups decode-merge-
-       re-encode; doc_stats appends the fresh rows; corpus_stats folds
+       byte-identical (no decode); touched groups tail-append the fresh
+       postings; doc_stats appends the fresh rows; corpus_stats folds
        the increment. The expensive parse is never recomputed, and
        neither is the untouched bulk of the postings table.
     3. fall back to the full re-derive (``derive_index_tables`` over the
        whole parsed relation) when the incremental preconditions fail —
-       a table is missing, or the ``derived_from_batches`` stamp says the
-       derived tables are stale (a previous compaction crashed mid-swap).
+       a table is missing, the index is Iceberg-routed, or the
+       ``derived_from_batches`` stamp says the derived tables are stale
+       (a previous compaction crashed mid-swap). The fallback drops the
+       derived tables first whenever they are stale or a fresh batch was
+       just appended: they are a pure function of ``parsed``, and a kept
+       table would never absorb the new batch.
 
     Crash-safety is keep-old-until-swap: every table write is atomic
     (_tmp + rename) and the ``derived_from_batches`` manifest stamp is
@@ -200,16 +204,21 @@ def compact_staging(
     property stamps (stemming, topical_terms, glove, buckets), so
     compacting a stemmed or topical index without the original config
     object cannot silently flip its semantics; an explicitly passed
-    ``config`` that contradicts the stamps raises.
+    ``config`` that contradicts the stamps raises. An index built with
+    url-hash doc ids raises ValueError (see
+    ``index_build.require_monotone_doc_ids``): rebuild it first.
     """
     from pyspark.sql import Window
 
     from search_engine_spark.operators.index_build import (
         config_from_properties, derive_index_tables, merge_derive_tables,
+        require_monotone_doc_ids,
     )
+    from search_engine_spark.operators.parse import assign_doc_ids
     from search_engine_spark.sources.catalog import CatalogAdapter
 
     cat = CatalogAdapter(index_path)
+    require_monotone_doc_ids(cat.properties())
     cfg = config_from_properties(cat.properties(), explicit=config)
 
     # Staleness gate, computed BEFORE this invocation appends anything:
@@ -229,41 +238,27 @@ def compact_staging(
 
     staged = spark.read.parquet(staging_dir)
 
-    # Doc identity key: in hash mode doc_id IS the url hash, so id equality
-    # = url equality; in monotone mode ids are batch-sequential, so re-crawl
-    # dedup must join on the url itself (staging ids are provisional and
-    # re-assigned below).
-    key = "url" if cfg.doc_id_mode == "monotone" else "doc_id"
+    # Doc identity is the url: ids are batch-sequential, and staging ids
+    # are provisional (re-assigned below).
     # read_table (not a direct parquet read) so an Iceberg-routed index
     # compacts the table it actually wrote (catalog dispatches on ident)
-    existing = cat.read_table(spark, "parsed").select(key)
+    existing = cat.read_table(spark, "parsed").select("url")
     # latest-wins within staging: the same doc can appear twice in the
     # staging dir (foreachBatch retry re-appending after a partial write,
     # or the same url crawled twice before compaction ran)
-    w = Window.partitionBy(key).orderBy(
-        F.col("warc_ts").desc_nulls_last(), F.col("url")
-    )
+    w = Window.partitionBy("url").orderBy(F.col("warc_ts").desc_nulls_last())
     fresh = (
-        staged.join(existing, key, "left_anti")
+        staged.join(existing, "url", "left_anti")
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        .drop("_rn", "doc_id", "bucket")
     )
-    if cfg.doc_id_mode == "monotone":
-        # staging ids were assigned with a provisional batch_seq by the
-        # micro-batch parse; re-assign from the NEXT free 2^48 slot above
-        # everything already in parsed so the merge stays a tail-append
-        # (max() is a cheap parquet-stats agg on a long column)
-        from search_engine_spark.operators.parse import (
-            DOC_ID_BATCH_SHIFT, assign_doc_ids,
-        )
-
-        max_id = (
-            cat.read_table(spark, "parsed")
-            .agg(F.max("doc_id")).collect()[0][0]
-        )
-        next_seq = (int(max_id) >> DOC_ID_BATCH_SHIFT) + 1
-        fresh = assign_doc_ids(fresh.drop("doc_id", "bucket"), cfg, next_seq)
+    # the micro-batch parse assigned ids with a provisional batch_seq;
+    # re-assign in the slot numbered by the batches already in parsed —
+    # build batch i holds slot i and each compaction batch the count
+    # before it, so that count exceeds every slot in use and the merge
+    # stays a tail-append
+    fresh = assign_doc_ids(fresh, cfg, len(cat.completed_batches("parsed")))
     fresh = fresh.persist()  # evaluated twice: the isEmpty probe + append
 
     batch_id = "compact-%d" % (
@@ -284,14 +279,6 @@ def compact_staging(
                          metrics={"strategy": "stream_compact",
                                   "staging_dir": staging_dir})
     fresh.unpersist()  # appended (or empty); all later reads go via parsed
-
-    if not stamp_ok:
-        # stale (or never-committed) stamp: the derived tables may be
-        # internally inconsistent — drop them so the fallback re-derives
-        # the complete index from ``parsed`` (always complete, including
-        # the batch just appended)
-        for table in derived_tables:
-            cat.drop_table(table)
 
     # Iceberg routing: merge_derive_tables overwrites doc_stats/postings
     # with plans that READ the same table. The parquet branch is safe
@@ -314,6 +301,14 @@ def compact_staging(
             spark, cat, batch_id, cfg
         )
     else:
+        if batch_id is not None or not stamp_ok:
+            # the derived tables never absorbed the batch just appended, or
+            # a stale stamp says they may be internally inconsistent: drop
+            # them so the re-derive rebuilds the complete index from
+            # ``parsed`` (always complete, including that batch) — the
+            # re-derive skips every table that still exists
+            for table in derived_tables:
+                cat.drop_table(table)
         parsed = cat.read_table(spark, "parsed").drop("batch")
         stage_sec, n_docs, avg_dl = derive_index_tables(spark, cat, parsed,
                                                         cfg)

@@ -19,7 +19,7 @@ def built_index(spark, tiny_corpus_path, tmp_path_factory):
     index_path = str(tmp_path_factory.mktemp("index") / "tiny")
     pages = spark.read.parquet(tiny_corpus_path)
     cfg = EngineConfig(num_buckets=4, shuffle_partitions=8)
-    metrics = build_index(spark, pages, index_path, cfg, compress=True)
+    metrics = build_index(spark, pages, index_path, cfg)
     return index_path, cfg, metrics
 
 
@@ -104,7 +104,7 @@ def built_index_stemmed(spark, tiny_corpus_path, tmp_path_factory):
     index_path = str(tmp_path_factory.mktemp("index") / "tiny_stemmed")
     pages = spark.read.parquet(tiny_corpus_path)
     cfg = EngineConfig(num_buckets=4, shuffle_partitions=8, stemming=True)
-    build_index(spark, pages, index_path, cfg, compress=True)
+    build_index(spark, pages, index_path, cfg)
     return index_path, cfg
 
 

@@ -29,7 +29,7 @@ def bm25_index(spark, tiny_corpus_path, tmp_path_factory):
     index_path = str(tmp_path_factory.mktemp("index") / "wand")
     pages = spark.read.parquet(tiny_corpus_path)
     cfg = EngineConfig(num_buckets=4, shuffle_partitions=8, **PURE_BM25)
-    build_index(spark, pages, index_path, cfg, compress=True)
+    build_index(spark, pages, index_path, cfg)
     return index_path, cfg
 
 
